@@ -810,8 +810,8 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash near-dup pair graph — (id, comp) with comp = min reachable
     doc id. Pairs alone don't dedup a corpus (near-dup isn't
     transitive); this is the canonical-survivor step every training-data
-    pipeline needs. Iterative hash-min label propagation, checkpointed
-    per round; oracle = DuckDB recursive CTE closure."""
+    pipeline needs. Per-partition union-find rounds (usually one),
+    checkpointed per round; oracle = DuckDB recursive CTE closure."""
     from kenlm_spark.operators.dedup import dedup_components, minhash_lsh_pairs
 
     pairs = minhash_lsh_pairs(_docs(spark, sf_dir), jaccard_threshold=0.5)

@@ -9,9 +9,10 @@
  * the GIL for (ctypes releases the GIL around the call).
  *
  * MD5 is implemented from the public specification (RFC 1321).  The
- * 64-entry sine table is computed at first use from libm's sin() --
- * identical values to the spec's floor(abs(sin(i+1)) * 2^32) table --
- * so there is no hand-transcribed constant block to get wrong; the
+ * 64-entry sine table is computed when the library loads, from libm's
+ * sin() -- identical values to the spec's floor(abs(sin(i+1)) * 2^32)
+ * table -- so there is no hand-transcribed constant block to get wrong,
+ * and threads calling the kernel only ever read it; the
  * Python wrapper A/B-tests the kernel against hashlib on import and
  * falls back if anything disagrees.
  */
@@ -26,13 +27,10 @@ static const int S[64] = {
     5, 9, 14, 20, 5, 9, 14, 20, 5, 9, 14, 20, 5, 9, 14, 20,
     4, 11, 16, 23, 4, 11, 16, 23, 4, 11, 16, 23, 4, 11, 16, 23,
     6, 10, 15, 21, 6, 10, 15, 21, 6, 10, 15, 21, 6, 10, 15, 21};
-static int k_ready = 0;
 
-static void init_k(void) {
-    if (k_ready) return;
+__attribute__((constructor)) static void init_k(void) {
     for (int i = 0; i < 64; i++)
         K[i] = (uint32_t)(fabs(sin((double)(i + 1))) * 4294967296.0);
-    k_ready = 1;
 }
 
 static inline uint32_t rotl(uint32_t x, int c) {
@@ -77,7 +75,6 @@ static void md5_block(uint32_t st[4], const uint8_t *p) {
  * concatenating buffers: feed whole 64-byte blocks as they fill. */
 static uint64_t md5_h60_2(const uint8_t *pre, int64_t npre,
                           const uint8_t *body, int64_t nbody) {
-    init_k();
     uint32_t st[4] = {0x67452301u, 0xefcdab89u, 0x98badcfeu, 0x10325476u};
     uint8_t blk[64];
     int fill = 0;

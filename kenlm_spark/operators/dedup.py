@@ -12,6 +12,12 @@ Four families, each a first-class `queries()` entry with a DuckDB oracle:
                    max_hamming+1 bit-bands (pigeonhole: recall is exact).
 * n-gram Jaccard — the verify step, also usable standalone on candidates.
 
+Pairs become clusters in `dedup_components`: per round, one Arrow pass
+union-finds each partition's edges and one groupBy links the local roots
+a vertex received; a round in one partition resolves everything, so
+rounds ≤ 1 + ⌈log₄ P⌉ for P shuffle partitions, whatever the diameter.
+`dedup_canonical_drop` keeps each cluster's minimum id.
+
 Cross-engine hash: h(s) = int(md5(s)[0:15], 16) — 60 bits, identical in
 Spark (`conv(substring(md5(x),1,15),16,10)`) and DuckDB
 (`CAST('0x' || substring(md5(x),1,15) AS BIGINT)`), so every stage is
@@ -855,6 +861,59 @@ LEFT JOIN hits h ON h.id = c.{id_col}
 # ------------------------------------------------- components / canonical
 
 
+def _min_labels(a, b, n: int):
+    """Component label of each of ``n`` nodes joined by index edges a–b:
+    the smallest node index of its component. Vectorized union-find —
+    every root hooks onto the smallest root across its edges
+    (``np.minimum.at``), then pointer jumping flattens the forest —
+    repeated until no edge joins two roots. Pointers only ever decrease,
+    so each root is its component's minimum."""
+    import numpy as np
+
+    lab = np.arange(n)
+    while True:
+        la, lb = lab[a], lab[b]
+        split = la != lb
+        if not split.any():
+            return lab
+        np.minimum.at(
+            lab, np.maximum(la, lb)[split], np.minimum(la, lb)[split]
+        )
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+
+
+def _local_roots(batches):
+    """mapInArrow body: union-find over one partition's (u, v) edges,
+    emitting (v, r) for every vertex with r = the smallest id of its
+    local component. A null v marks a pair with a null end: its non-null
+    end stands alone, and one (null, null) row keeps the null vertex."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    if not batches:
+        return
+    tbl = pa.Table.from_batches(batches).combine_chunks()
+    u, v = tbl.column("u"), tbl.column("v")
+    typ = u.type
+    real = pc.is_valid(u)
+    uu = u.filter(real).to_numpy()
+    vv = pc.coalesce(v, u).filter(real).to_numpy()
+    ids, inv = np.unique(np.concatenate([uu, vv]), return_inverse=True)
+    roots = ids[_min_labels(inv[: len(uu)], inv[len(uu):], len(ids))]
+    names = ["v", "r"]
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids, typ), pa.array(roots, typ)], names
+    )
+    if v.null_count:
+        yield pa.RecordBatch.from_arrays([pa.nulls(1, typ)] * 2, names)
+
+
 def dedup_components(
     pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     max_iter: int = 30,
@@ -863,75 +922,68 @@ def dedup_components(
     comp = the MINIMUM doc id reachable from ``id``. Pairs alone don't
     dedup a corpus; transitive closure does (a~b, b~c ⇒ keep one of
     {a,b,c}), and near-dup relations are not transitive, so this is a
-    real operator, not a groupBy.
+    real operator, not a groupBy. A pair with a null end links nothing:
+    its other end is its own component, plus one (null, null) row.
 
-    Iterative hash-min label propagation: each round every vertex takes
-    min(own label, neighbors' labels), checkpointed per round so the
-    lineage stays flat; terminates when a round changes nothing.
-    Rounds needed = graph diameter — tiny for dup clusters (replica
-    groups are near-cliques through their shared buckets, diameter 1-3),
-    so at 100 TB this is a handful of self-joins on the (small) pair
-    set, never touching the corpus. For adversarial long-chain graphs
-    the large-star/small-star variant halves diameter per round; not
-    needed for dedup workloads.
+    Each round is one Arrow pass and one groupBy over the round's edges
+    (at first the distinct undirected pairs, ``least``/``greatest``):
+
+    * the pass runs a numpy union-find over each partition's edges and
+      emits (v, r), r = the smallest id of v's local component;
+    * ``groupBy(v)`` takes comp = min(r) and the set of roots v got; a
+      vertex that got several roots links them, and those link edges are
+      the next round's input. Labels compose with one left join per
+      extra round, and the loop stops when a round has no links.
+
+    Every round is checkpointed (flat lineage). The common case is one
+    round: AQE coalesces a dedup pair set into one partition, whose
+    union-find is global. Otherwise each later round coalesces its link
+    edges into a quarter of the previous round's partitions, so rounds ≤
+    1 + ⌈log₄ P⌉ for P shuffle partitions whatever the graph's diameter
+    (a round in one partition leaves no links). Exhausting ``max_iter``
+    raises instead of returning partial labels.
     """
+    from pyspark.sql.types import StructField, StructType
+
     from kenlm_spark.session import checkpoint_disk
 
-    edges = checkpoint_disk(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-        )
-        .distinct()
-    )
-    labels = checkpoint_disk(
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-    )
+    a, b = F.col(id_a), F.col(id_b)
+    edges = pairs.select(
+        F.least(a, b).alias("u"),
+        F.when(a.isNotNull() & b.isNotNull(), F.greatest(a, b)).alias("v"),
+    ).distinct()
+    typ = edges.schema["u"].dataType
+    schema = StructType([StructField("v", typ), StructField("r", typ)])
+    labels = parts = None
     for _ in range(max_iter):
-        nbr = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("comp").alias("nmin"))
+        rnd = checkpoint_disk(
+            edges.mapInArrow(_local_roots, schema)
+            .groupBy("v")
+            .agg(F.min("r").alias("comp"), F.collect_set("r").alias("roots"))
         )
-        # r8: the changed flag rides the SAME checkpointed round output
-        # (old comp is already on the row being updated), so the
-        # convergence probe is a filter-count over the materialized
-        # round instead of a second join against the previous labels —
-        # one fewer join + job per round, identical comp values and
-        # stopping rule.
-        new = (
-            labels.join(nbr, labels["id"] == nbr["src"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce("nmin", F.col("comp"))
-                ).alias("comp"),
-                (
-                    F.least(
-                        F.col("comp"), F.coalesce("nmin", F.col("comp"))
-                    )
-                    != F.col("comp")
-                ).alias("_chg"),
+        if labels is None:
+            labels = rnd.select(F.col("v").alias("id"), "comp")
+        else:
+            labels = labels.join(
+                rnd, labels["comp"] == rnd["v"], "left"
+            ).select(
+                labels["id"],
+                F.coalesce(rnd["comp"], labels["comp"]).alias("comp"),
             )
-        )
-        new = checkpoint_disk(new)
-        changed = new.filter(F.col("_chg")).count()
-        labels = new.select("id", "comp")
-        if changed == 0:
-            break
-    else:
-        # Exhausting max_iter without a fixed point means the labels are
-        # NOT components yet (adversarial long-chain graphs); returning
-        # them silently would yield wrong canonical survivors.
-        raise RuntimeError(
-            f"dedup_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); the pair graph has "
-            f"diameter > max_iter — raise max_iter or pre-contract "
-            f"chains (large-star/small-star)"
-        )
-    return labels
+        edges = rnd.select(
+            F.col("comp").alias("u"), F.explode("roots").alias("v")
+        ).where(F.col("u") != F.col("v"))
+        if edges.isEmpty():
+            return labels
+        n = edges.rdd.getNumPartitions()
+        parts = max(1, min(n, parts or n) // 4)
+        edges = edges.coalesce(parts)
+    # Exhausting max_iter leaves labels that are NOT components yet;
+    # returning them silently would yield wrong canonical survivors.
+    raise RuntimeError(
+        f"dedup_components did not converge in {max_iter} rounds; "
+        f"raise max_iter"
+    )
 
 
 def dedup_canonical_drop(

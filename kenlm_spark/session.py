@@ -3,7 +3,9 @@
 Defaults chosen for the 100 TB design point and scaled down by environment:
 AQE on (runtime re-plan + skew-join splitting), Arrow enabled for all
 pandas UDF exchange, shuffle partitions sized to cores locally (on a real
-cluster this is overridden via spark-submit --conf).
+cluster this is overridden via spark-submit --conf). The driver heap
+defaults to min(16g, half of the host's MemTotal); SPARK_DRIVER_MEM
+overrides it.
 """
 
 from __future__ import annotations
@@ -11,6 +13,29 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _mem_total_kib(meminfo: str = "/proc/meminfo") -> int | None:
+    """MemTotal from ``meminfo``, in KiB; None where it can't be read."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def _driver_memory() -> str:
+    """SPARK_DRIVER_MEM if set, else min(16g, half of MemTotal) in MiB
+    (16g where MemTotal can't be read)."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    total = _mem_total_kib()
+    cap = 16 << 10
+    return f"{cap if total is None else min(cap, total >> 11)}m"
 
 
 def get_spark(
@@ -32,13 +57,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        # 16g default (r8, was 8g): local mode makes the driver THE
-        # executor; the sandbox has 128 GiB and a full 84-query sweep at
-        # a 100x scale factor sat exactly at the 8g heap edge (one
-        # harness variant OOM'd, the other passed).  Still overridable
-        # via SPARK_DRIVER_MEM; on a real cluster executor memory is a
+        # Local mode makes the driver THE executor: a full 84-query sweep
+        # at a 100x scale factor needed more than 8g, so the default is
+        # 16g, capped at half the host's memory so a small host is not
+        # driven into swap.  On a real cluster executor memory is a
         # spark-submit concern, not this default.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         # Benchmark/driver sessions run hundreds of jobs; the context
         # cleaner frees checkpoint/broadcast blocks only after a JVM GC
         # collects their weak references, and the default periodic-GC

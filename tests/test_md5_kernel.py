@@ -63,3 +63,23 @@ def test_values_fit_int64():
     msgs = [b"a", b"b", b"c"]
     out = h60_bytes_batch(msgs)
     assert int(out.max()) < 2**60
+
+
+def test_concurrent_calls_match_hashlib():
+    """The kernel's tables are written once when the library loads, so
+    threads calling it at once (ctypes drops the GIL) all read the same
+    constants."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    msgs = [f"doc {i} ".encode() * (i % 40) for i in range(3000)]
+    want = _ref(msgs)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            futs = [pool.submit(h60_bytes_batch, msgs) for _ in range(32)]
+            results = [f.result(timeout=60) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    assert all(list(r) == want for r in results)

@@ -596,9 +596,8 @@ def test_dedup_components_and_canonical(spark):
 
 
 def test_dedup_components_long_chain_converges(spark):
-    """A 40-node path graph (diameter 39) still converges: hash-min
-    propagates the minimum one hop per round, and the operator iterates
-    to quiescence within max_iter."""
+    """A 40-node path graph (diameter 39) resolves to one component: the
+    round count does not grow with the graph's diameter."""
     from kenlm_spark.operators.dedup import dedup_components
 
     pairs = spark.createDataFrame(
@@ -607,6 +606,97 @@ def test_dedup_components_long_chain_converges(spark):
     comp = {r["id"]: r["comp"] for r in dedup_components(pairs, max_iter=60).collect()}
     assert set(comp.values()) == {0}
     assert len(comp) == 41
+
+
+def _union_find(pairs):
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_min_labels_matches_union_find():
+    """The numpy union-find of the local pass labels every node with its
+    component's smallest index, on random sparse and dense graphs."""
+    from kenlm_spark.operators.dedup import _min_labels
+
+    rng = np.random.default_rng(5)
+    for n, m in ((1, 0), (50, 20), (300, 280), (300, 2000)):
+        a, b = rng.integers(0, n, m), rng.integers(0, n, m)
+        want = _union_find(zip(a.tolist(), b.tolist()))
+        got = _min_labels(a, b, n)
+        assert all(got[x] == want.get(x, x) for x in range(n))
+
+
+def test_dedup_components_weak_local_contraction(spark, monkeypatch):
+    """Edges left in 16 uncoalesced partitions: each partition's
+    union-find sees scattered path edges and contracts little, so later
+    rounds must shrink the partition count. A 200-node path (ids
+    shuffled) plus cliques still matches a plain union-find within the
+    default max_iter, in at most 1 + log4(16) rounds; max_iter=1 raises."""
+    import random
+
+    from kenlm_spark import session
+    from kenlm_spark.operators.dedup import dedup_components
+
+    rng = random.Random(3)
+    ids = list(range(1000, 1200))
+    rng.shuffle(ids)
+    pairs = list(zip(ids, ids[1:]))
+    for base, size in ((5000, 3), (6000, 6), (7000, 9)):
+        pairs += [(base + i, base + j) for i in range(size) for j in range(i)]
+    rounds = []
+    real = session.checkpoint_disk
+    monkeypatch.setattr(
+        session, "checkpoint_disk", lambda df: rounds.append(1) or real(df)
+    )
+    conf = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "16",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df = spark.createDataFrame(pairs, "id_a long, id_b long")
+        comp = {r["id"]: r["comp"] for r in dedup_components(df).collect()}
+        assert comp == _union_find(pairs)
+        assert 2 <= len(rounds) <= 3
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup_components(df, max_iter=1)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_dedup_components_null_ends_and_int_ids(spark):
+    """int ids stay int, and a pair with a null end links nothing: its
+    other end stands alone, plus one (null, null) row."""
+    from kenlm_spark.operators.dedup import (
+        dedup_canonical_drop,
+        dedup_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (5, 6)], "id_a int, id_b int"
+    )
+    comp = dedup_components(pairs)
+    assert comp.schema.simpleString() == "struct<id:int,comp:int>"
+    rows = sorted(
+        (tuple(r) for r in comp.collect()), key=lambda r: (r[0] is None, r)
+    )
+    assert rows == [(1, 1), (2, 1), (3, 3), (5, 5), (6, 5), (None, None)]
+    docs = spark.createDataFrame([(i,) for i in [1, 2, 3, 5, 6]], "doc_id int")
+    keep = dict(tuple(r) for r in dedup_canonical_drop(docs, pairs).collect())
+    assert keep == {1: True, 2: False, 3: True, 5: True, 6: False}
 
 
 def test_ivf_pq_recall_vs_exact(spark, emb):
