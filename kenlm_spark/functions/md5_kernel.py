@@ -17,12 +17,11 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import pkgutil
 import subprocess
 import tempfile
 
 import numpy as np
-
-_SRC = os.path.join(os.path.dirname(__file__), "md5_kernel.c")
 
 _lib = None
 _lib_tried = False
@@ -70,18 +69,25 @@ def _compile():
     if os.environ.get("KENLM_SPARK_NATIVE", "1") == "0":
         return None
     try:
-        with open(_SRC, "rb") as fh:
-            src = fh.read()
+        # get_data reads the source from a directory and from a
+        # --py-files zip alike; the compiler gets a cached copy
+        src = pkgutil.get_data(__package__, "md5_kernel.c")
         tag = hashlib.sha256(src).hexdigest()[:16]
         cache = os.path.join(tempfile.gettempdir(), "kenlm_spark_native")
         os.makedirs(cache, exist_ok=True)
         so = os.path.join(cache, f"md5_kernel_{tag}.so")
         if not os.path.exists(so):
             tmp = so + f".{os.getpid()}.tmp"
+            # the copy keeps the file's basename, which the .so records
+            c_path = os.path.join(cache, tag, "md5_kernel.c")
+            os.makedirs(os.path.dirname(c_path), exist_ok=True)
+            with open(tmp + ".c", "wb") as fh:
+                fh.write(src)
+            os.replace(tmp + ".c", c_path)
             for cc in ("cc", "gcc", "clang", "g++"):
                 try:
                     r = subprocess.run(
-                        [cc, "-O3", "-fPIC", "-shared", "-o", tmp, _SRC,
+                        [cc, "-O3", "-fPIC", "-shared", "-o", tmp, c_path,
                          "-lm"],
                         capture_output=True,
                         timeout=120,

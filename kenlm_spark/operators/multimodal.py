@@ -369,8 +369,8 @@ def phash_near_pairs(
     threshold max_hamming=2 gives 3 bands x 21 bits (2M buckets/band)
     and holds to ~10^9 images per shard — beyond that, shard by a
     coarse key (e.g. phash's top byte) or move to a longer hash.
-    scripts/bench_scaling_phash.py measures the N->4N scaling of this
-    operator at max_hamming=2."""
+    ``scripts/bench_scaling.py --workload phash`` measures the N->4N
+    scaling of this operator at max_hamming=2."""
     return _phash_pair_emissions(
         df, id_col, phash_col, max_hamming, max_bucket
     ).distinct()
@@ -550,8 +550,8 @@ def phash_dedup_labels(
     corpus (a real crawl runs 30-80% near-dups) makes it corpus-scale —
     pass ``broadcast_drops=False`` there and the labels come from an
     id-keyed shuffle join instead (measured: the forced broadcast OOMs
-    the driver at a 6.4M-id dropped set, scripts/bench_scaling_phash.py
-    runs the shuffle path).
+    the driver at a 6.4M-id dropped set; ``scripts/bench_scaling.py
+    --workload phash`` runs the shuffle path).
     """
     dropped = (
         phash_dropped_ids(df, id_col, phash_col, max_hamming, max_bucket)

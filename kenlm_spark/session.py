@@ -38,13 +38,18 @@ def _driver_memory() -> str:
     return f"{cap if total is None else min(cap, total >> 11)}m"
 
 
+def _cpus() -> int:
+    """Cores this host offers Spark: SPARK_GRAFT_CPUS, else os.cpu_count()."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
 def get_spark(
     app_name: str = "kenlm_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = _cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (

@@ -3,7 +3,8 @@
 Run via spark-submit with the packaged library (the north-rule deployment
 shape)::
 
-    python scripts/make_pyfiles_zip.py   # or scripts/bench_scaling.py's zip
+    python -c "import sys; sys.path.insert(0, 'scripts'); \
+        import bench_scaling; print(bench_scaling.make_pyfiles_zip())"
     spark-submit --py-files /tmp/kenlm_spark_pyfiles.zip \
         scripts/run_filter_job.py \
         --input  <path or Iceberg table of images> \

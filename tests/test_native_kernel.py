@@ -273,3 +273,33 @@ def test_fused_caption_scorer_matches_legacy():
                 ), (col, stupid)
             else:
                 assert np.array_equal(av, bv), (col, stupid)
+
+
+def test_kernels_compile_from_pyfiles_zip(tmp_path):
+    """Executors that import the package from a --py-files zip get both
+    compiled kernels, not the numpy/hashlib fallback: the zip carries
+    the C sources and the loaders read them through the import system."""
+    import json
+    import os
+    import subprocess
+
+    from bench_scaling import make_pyfiles_zip
+
+    zip_path = make_pyfiles_zip(str(tmp_path / "pkg.zip"))
+    env = {**os.environ, "PYTHONPATH": zip_path, "TMPDIR": str(tmp_path)}
+    env.pop("KENLM_SPARK_NATIVE", None)
+    code = (
+        "import json, kenlm_spark\n"
+        "from kenlm_spark.functions import md5_kernel\n"
+        "from kenlm_spark.ngram import native_kernel\n"
+        "print(json.dumps([kenlm_spark.__file__,"
+        " native_kernel._compile() is not None,"
+        " md5_kernel._compile() is not None]))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300, check=True,
+    )
+    origin, score, md5 = json.loads(out.stdout.strip().splitlines()[-1])
+    assert origin.startswith(zip_path)
+    assert (score, md5) == (True, True)
