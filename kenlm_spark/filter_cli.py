@@ -37,31 +37,13 @@ from __future__ import annotations
 import sys
 
 
-def _read_arpa(fh):
-    """-> (counts, {order: [(words_tuple, raw_line), ...]}), lines verbatim."""
-    line = fh.readline()
-    while line and line.strip() != "\\data\\":
-        line = fh.readline()
-    counts = []
-    while True:
-        line = fh.readline().strip()
-        if not line:
-            break
-        counts.append(int(line.split("=")[1]))
-    sections: dict[int, list] = {}
-    for n in range(1, len(counts) + 1):
-        line = fh.readline()
-        while line.strip() == "":
-            line = fh.readline()
-        assert line.strip() == f"\\{n}-grams:", line
-        rows = []
-        for _ in range(counts[n - 1]):
-            raw = fh.readline().rstrip("\n")
-            parts = raw.split("\t")
-            words = tuple(parts[1].split(" "))
-            rows.append((words, raw))
-        sections[n] = rows
-    return counts, sections
+def _read_arpa(fh) -> dict[int, list]:
+    """-> {order: [(words_tuple, raw_line), ...]}, lines verbatim. Read
+    through the loader's line grammar, so a malformed model raises
+    ArpaFormatError instead of being misparsed."""
+    from kenlm_spark.ngram.arpa import arpa_sections
+
+    return {sec.n: list(zip(sec.grams(), sec.lines)) for sec in arpa_sections(fh)}
 
 
 def _write_arpa(sections: dict[int, list], out) -> None:
@@ -123,7 +105,7 @@ def main(argv=None) -> int:
             words = tuple(gram.split(" "))
             sections.setdefault(len(words), []).append((words, line))
     else:
-        _counts, sections = _read_arpa(fh)
+        sections = _read_arpa(fh)
 
     def write_out(filtered, out):
         if raw_fmt:

@@ -164,12 +164,13 @@ def write_probing_from_arpa(arpa_path: str, path: str,
     """
     import numpy as np
 
-    from kenlm_spark.ngram.arpa import load_arpa
+    from kenlm_spark.ngram.arpa import load_arpa_grams
     from kenlm_spark.ngram.hashing import combine_word_hash
-    from kenlm_spark.ngram.trie_writer import _read_raw_grams
 
-    model = load_arpa(arpa_path, rest=rest, unknown_logprob=unknown_logprob)
-    order, grams = _read_raw_grams(arpa_path)
+    model, grams = load_arpa_grams(
+        arpa_path, rest=rest, unknown_logprob=unknown_logprob
+    )
+    order = model.order
     aid = model.vocab
     arpa_counts = [len(grams[n]) for n in range(1, order + 1)]
 

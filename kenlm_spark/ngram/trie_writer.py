@@ -44,13 +44,7 @@ import struct
 
 import numpy as np
 
-from kenlm_spark.ngram.arpa import (
-    _expect_end,
-    _expect_header,
-    _open,
-    _parse_ngram_line,
-    parse_arpa,
-)
+from kenlm_spark.ngram.arpa import load_arpa_grams
 from kenlm_spark.ngram.binary import (
     MAGIC,
     _FIXED_SIZE,
@@ -151,30 +145,6 @@ def _scatter_bits(
     np.bitwise_or.at(region, byte + 8, hi)
 
 
-def _read_raw_grams(path: str):
-    """Parse the ARPA a second time for STRUCTURE only: per order, the
-    word tuples in file order (values come from parse_arpa's model)."""
-    with _open(path) as f:
-        line = f.readline()
-        while line and line.strip() == "":
-            line = f.readline()
-        counts = []
-        while True:
-            line = f.readline().strip()
-            if not line:
-                break
-            counts.append(int(line.split("=")[1]))
-        order = len(counts)
-        grams: dict[int, list[tuple[str, ...]]] = {}
-        for n in range(1, order + 1):
-            _expect_header(f, n)
-            grams[n] = [
-                tuple(_parse_ngram_line(f, n)[1]) for _ in range(counts[n - 1])
-            ]
-        _expect_end(f)
-    return order, grams
-
-
 def _model_lookup(model: NGramModel, n: int, keys: np.ndarray):
     """probs/backoffs for order-n grams by probing hash key (the model's
     key arrays are sorted)."""
@@ -206,16 +176,14 @@ def write_trie(arpa_path: str, out_path: str,
     pointers: per-middle uint64 offset arrays + inline low bits with the
     ChopBits cost argmin (lm/bhiksha.cc). All four resulting model types
     (2-5) are byte-identical to ``build_binary`` given the same flags."""
-    from kenlm_spark.ngram.arpa import load_arpa
-
     if (quant_bits is None) != (backoff_bits is None):
         raise ValueError("pass both quant_bits and backoff_bits or neither")
     quantized = quant_bits is not None
     model_type = TRIE_TYPE + (1 if quantized else 0) + (
         2 if array_bits is not None else 0
     )
-    model = load_arpa(arpa_path, unknown_logprob=unknown_logprob)
-    order, grams = _read_raw_grams(arpa_path)
+    model, grams = load_arpa_grams(arpa_path, unknown_logprob=unknown_logprob)
+    order = model.order
     if order < 2:
         raise ValueError("trie layout needs order >= 2")
     saw_unk = any(g[0] in (UNK, "<UNK>") for g in grams[1])

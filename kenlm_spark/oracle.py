@@ -35,32 +35,25 @@ def _f32(x: float) -> str:
 def arpa_ngram_rows(path: str) -> list[tuple[int, str, float, float]]:
     """(order, gram, prob, backoff) rows straight from an ARPA file.
 
-    Reuses the parser's line semantics: missing/explicit-zero backoff → 0.0
-    for oracle purposes (sign of zero is irrelevant to score totals); adds
-    the (-100, 0) <unk> default when the file lacks it (lm/model.cc:121-126).
+    Reads through the loader's line grammar: missing/explicit-zero backoff
+    → -0.0 (sign of zero is irrelevant to score totals); adds the
+    (-100, 0) <unk> default when the file lacks it (lm/model.cc:121-126).
     """
-    from kenlm_spark.ngram import arpa as _arpa
+    from itertools import repeat
+
+    from kenlm_spark.ngram.arpa import _open, arpa_sections
 
     rows: list[tuple[int, str, float, float]] = []
     saw_unk = False
-    with _arpa._open(path) as f:
-        line = f.readline()
-        while line and line.strip() != "\\data\\":
-            line = f.readline()
-        counts = []
-        while True:
-            line = f.readline().strip()
-            if not line:
-                break
-            counts.append(int(line.split("=")[1]))
-        for n in range(1, len(counts) + 1):
-            _arpa._expect_header(f, n)
-            for _ in range(counts[n - 1]):
-                prob, words, backoff = _arpa._parse_ngram_line(f, n)
-                gram = " ".join(words)
-                if n == 1 and words[0] in ("<unk>", "<UNK>"):
-                    gram, saw_unk = "<unk>", True
-                rows.append((n, gram, prob, backoff))
+    with _open(path) as f:
+        for sec in arpa_sections(f):
+            grams = list(map(" ".join, sec.grams()))
+            if sec.n == 1:
+                unk = [g in ("<unk>", "<UNK>") for g in grams]
+                saw_unk = any(unk)
+                grams = ["<unk>" if u else g for g, u in zip(grams, unk)]
+            rows += zip(repeat(sec.n), grams, sec.prob.tolist(),
+                        sec.backoff.tolist())
     if not saw_unk:
         rows.append((1, "<unk>", -100.0, 0.0))
     return rows

@@ -115,3 +115,37 @@ def test_raw_count_format(tmp_path, spark):
     assert set(open(out2).read().splitlines()) == set(
         counts.read_text().splitlines()
     )
+
+
+@pytest.mark.parametrize("broken", [
+    ("\\2-grams:", "\\3-grams:"),  # a section header that does not match
+    ("\\end\\", ""),  # no \end\ line
+])
+def test_malformed_model_raises(tmp_path, broken):
+    """The model is read through the loader's line grammar: a bad section
+    header or a missing \\end\\ raises instead of being misparsed."""
+    from kenlm_spark.ngram.arpa import ArpaFormatError
+
+    bad = tmp_path / "bad.arpa"
+    bad.write_text(open(ARPA).read().replace(*broken))
+    with pytest.raises(ArpaFormatError):
+        main(["copy", str(bad), str(tmp_path / "out.arpa")])
+
+
+def test_malformed_header_raises_under_optimize(tmp_path):
+    """``python -O`` strips assert statements; the header check must hold
+    there too."""
+    import subprocess
+    import sys
+
+    bad = tmp_path / "bad.arpa"
+    bad.write_text(open(ARPA).read().replace("\\2-grams:", "\\3-grams:"))
+    run = subprocess.run(
+        [sys.executable, "-O", "-m", "kenlm_spark.filter_cli", "copy",
+         str(bad), str(tmp_path / "out.arpa")],
+        capture_output=True, text=True,
+        cwd=os.path.join(os.path.dirname(__file__), ".."),
+    )
+    assert run.returncode != 0
+    assert "ArpaFormatError" in run.stderr
+    assert not (tmp_path / "out.arpa").exists()
