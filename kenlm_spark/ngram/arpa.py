@@ -290,10 +290,6 @@ def _section(n: int, order: int, text: str, count: int) -> ArpaSection:
         text = "\n".join([line.rstrip("\r") for line in text.split("\n")])
     fields = text
     tabs = _tabs_if_plain(fields, count, n)
-    if not tabs:  # a backoff left out on some lines only
-        fields = "\n".join([line + "\t0" if line.count("\t") == 1 else line
-                            for line in text.split("\n")])
-        tabs = _tabs_if_plain(fields, count, n)
     if not tabs:
         fields = "\n".join([_canonical(n, line) for line in text.split("\n")])
         tabs = 2

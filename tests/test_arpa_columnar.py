@@ -47,12 +47,13 @@ def assert_identical(got, want):
 
 
 def assert_same_outcome(text, **kw):
-    """Both loaders load ``text`` to identical models, or both reject it."""
+    """Both loaders load ``text`` to identical models, or both reject it
+    (the reference raises a bare ValueError for a bad number)."""
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
         try:
             want = oracle_arpa.loads_arpa(text, **kw)
-        except ArpaFormatError:
+        except ValueError:
             with pytest.raises(ArpaFormatError):
                 loads_arpa(text, **kw)
             return False
@@ -132,6 +133,49 @@ def test_random_models(tmp_path):
     # every plain rewrite loads; a pruned one often lacks a context
     assert all(loaded[k] == 200 for k in KINDS[:5]), loaded
     assert min(loaded["prune"], loaded["prune-shuffle"]) >= 20, loaded
+
+
+ODD_WORDS = ["a", "b", "<s>", "</s>", "ü", "日本", "x\x0by", "c\xa0d", "<UNK>",
+             "<unk>", ""]
+ODD_NUMBERS = ["-1.5", " -1.5", "-1.5 ", "-0", "0", "0.5", "nan", "-inf", "inf",
+               "-1_0", "-1e-3", "abc", "", "-\u0663", "+2"]
+
+
+def test_odd_lines():
+    """Small models whose lines mix odd words, number spellings Arrow does
+    not read (``-1_0``, Arabic-Indic digits, padded fields), doubled
+    spaces, stray tabs, the space form and CRLF: both loaders agree, or
+    both reject."""
+    rng = random.Random(7)
+
+    def line(n):
+        words = [rng.choice(ODD_WORDS) for _ in range(n)]
+        prob, backoff = rng.choice(ODD_NUMBERS), rng.choice(ODD_NUMBERS)
+        sep = rng.choice([" ", " ", " ", "  ", "\t"])
+        return rng.choice([
+            f"{prob}\t{sep.join(words)}\t{backoff}",
+            f"{prob}\t{sep.join(words)}",
+            " ".join([prob, *words, backoff]),
+            f"{prob}\t{' '.join(words)}\t{backoff}\t",
+        ])
+
+    loaded = 0
+    for _ in range(600):
+        unigrams = [f"{rng.choice(ODD_NUMBERS[:5])}\t{w}\t-0.5"
+                    for w in rng.sample(ODD_WORDS, rng.randint(1, 6))]
+        sections = [unigrams] + [[line(n) for _ in range(rng.randint(1, 5))]
+                                 for n in range(2, rng.randint(1, 3) + 1)]
+        if rng.random() < 0.3:
+            sections[0] = [line(1) for _ in unigrams]
+        text = "\\data\\\n" + "".join(
+            f"ngram {n}={len(s)}\n" for n, s in enumerate(sections, 1)
+        ) + "".join(
+            f"\n\\{n}-grams:\n"
+            + "".join(ln + rng.choice(["\n", "\r\n"]) for ln in s)
+            for n, s in enumerate(sections, 1)
+        ) + "\n\\end\\\n"
+        loaded += assert_same_outcome(text, rest=True)
+    assert loaded >= 100
 
 
 def test_compressed_copies(tmp_path):
