@@ -9,76 +9,36 @@ chain and backoff charge in registers/L1 — the same access pattern as
 the reference's query loop — and releases the GIL for the whole call,
 so all 32 local executor threads score concurrently.
 
-Strictly optional: compiled lazily per process with whatever ``cc`` is
-on PATH, cached in /tmp keyed by source hash; any failure (no compiler,
-sandboxed /tmp, exotic payload dtypes) silently falls back to the numpy
-path, which remains the portable reference implementation.  Both paths
-are pinned bit-identical by tests/test_model_golden.py's raw-bits A/B
-and the live differential suite vs the compiled reference binding.
-
-Set KENLM_SPARK_NATIVE=0 to disable (used by the A/B tests themselves).
+Strictly optional: ``kenlm_spark.native.load`` compiles and caches it
+once per process; when that yields no library (no compiler, sandboxed
+/tmp, ``KENLM_SPARK_NATIVE=0``) or the model's payload dtypes are
+exotic, ``NGramModel`` runs the numpy path, which remains the portable
+reference implementation.  Both paths are pinned bit-identical by
+tests/test_model_golden.py's raw-bits A/B and the live differential
+suite vs the compiled reference binding.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import pkgutil
-import subprocess
-import tempfile
 
 import numpy as np
 
+from kenlm_spark import native
+
 _MAX_ORDER = 16
 
-_lib = None
-_lib_tried = False
+_SYMBOLS = {
+    "score_stream": None,
+    "score_captions": None,
+    "hash_words": None,
+    "score_eos_stream": ctypes.c_int64,
+}
 
 
-def _compile() -> ctypes.CDLL | None:
-    global _lib, _lib_tried
-    if _lib_tried:
-        return _lib
-    _lib_tried = True
-    if os.environ.get("KENLM_SPARK_NATIVE", "1") == "0":
-        return None
-    try:
-        # get_data reads the source from a directory and from a
-        # --py-files zip alike; the compiler gets a cached copy
-        src = pkgutil.get_data(__package__, "score_kernel.c")
-        tag = hashlib.sha256(src).hexdigest()[:16]
-        cache = os.path.join(tempfile.gettempdir(), "kenlm_spark_native")
-        os.makedirs(cache, exist_ok=True)
-        so = os.path.join(cache, f"score_kernel_{tag}.so")
-        if not os.path.exists(so):
-            tmp = so + f".{os.getpid()}.tmp"
-            # the copy keeps the file's basename, which the .so records
-            c_path = os.path.join(cache, tag, "score_kernel.c")
-            os.makedirs(os.path.dirname(c_path), exist_ok=True)
-            with open(tmp + ".c", "wb") as fh:
-                fh.write(src)
-            os.replace(tmp + ".c", c_path)
-            for cc in ("cc", "gcc", "clang", "g++"):
-                try:
-                    r = subprocess.run(
-                        [cc, "-O3", "-fPIC", "-shared", "-o", tmp, c_path],
-                        capture_output=True,
-                        timeout=120,
-                    )
-                except (OSError, subprocess.TimeoutExpired):
-                    continue
-                if r.returncode == 0:
-                    os.replace(tmp, so)  # atomic vs concurrent builders
-                    break
-            else:
-                return None
-        lib = ctypes.CDLL(so)
-        lib.score_stream.restype = None
-        _lib = lib
-    except Exception:
-        _lib = None
-    return _lib
+def load() -> ctypes.CDLL | None:
+    """The compiled scorer library, or None for the numpy path."""
+    return native.load(__package__, "score_kernel", _SYMBOLS)
 
 
 class NativeScorer:
@@ -90,7 +50,7 @@ class NativeScorer:
     """
 
     def __init__(self, model) -> None:
-        lib = _compile()
+        lib = load()
         if lib is None:
             raise RuntimeError("native kernel unavailable")
         N = model.order
@@ -168,7 +128,6 @@ class NativeScorer:
                 np.cumsum(lens, out=offs[1:])
                 buf = np.frombuffer(b"".join(enc), dtype=np.uint8)
                 hashes = np.empty(V, dtype=np.uint64)
-                self._lib.hash_words.restype = None
                 self._lib.hash_words(
                     buf.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
                     offs.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
@@ -217,9 +176,7 @@ class NativeScorer:
         oov = np.empty(n, dtype=np.int64)
         ntok = np.empty(n, dtype=np.int64)
         vkeys, vids, vmask = self._vtable
-        lib = self._lib
-        lib.score_captions.restype = None
-        lib.score_captions(
+        self._lib.score_captions(
             buf.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
             offs.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
             ctypes.c_int64(n),
@@ -338,9 +295,7 @@ class NativeScorer:
         ids_u = np.ascontiguousarray(ids, dtype=np.uint64)
         self._check_ids(ids_u)
         total = ctypes.c_double(0.0)
-        lib = self._lib
-        lib.score_eos_stream.restype = ctypes.c_int64
-        n_sent = lib.score_eos_stream(
+        n_sent = self._lib.score_eos_stream(
             ids_u.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)),
             ctypes.c_int64(len(ids_u)),
             ctypes.c_uint64(eos_id),

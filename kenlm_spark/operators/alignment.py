@@ -28,7 +28,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kenlm_spark.operators.similarity import _seq_dot, _seq_sq_norm
+from kenlm_spark.operators.similarity import (
+    _seq_cos_blocks,
+    _seq_dot,
+    _seq_sq_norm,
+)
 
 
 def _fake_vec(salt: str, key: str, dim: int) -> np.ndarray:
@@ -254,7 +258,6 @@ def retrieval_recall(
 
     def run(batches):
         pids, pmat = bc.value
-        dim = pmat.shape[1]
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -265,20 +268,12 @@ def retrieval_recall(
             own = np.round(_seq_dot(tn, inn), 6)
             ids = pdf["_id"].to_numpy()
             # pool cosines with the same sequential-over-dims fold the
-            # SQL twin's list_sum uses.  Row-TILED (r8): the full
-            # batch×pool score slab cost dim+3 DRAM sweeps per batch
-            # (memory-bandwidth-bound at a 10k pool); a ~10 MB tile
-            # keeps the dim passes and the rank comparisons in cache.
-            # Per-element operations and their order are unchanged.
-            n = len(tn)
-            rank = np.empty(n, dtype=np.int64)
-            tile = max(1, 10_000_000 // (8 * max(len(pids), 1)))
-            for s in range(0, n, tile):
-                e = min(s + tile, n)
-                acc = np.zeros((e - s, len(pids)))
-                for d in range(dim):
-                    acc += tn[s:e, d : d + 1] * pmat[None, :, d][0]
-                pc = np.round(acc, 6)
+            # SQL twin's list_sum uses, row-tiled so the dim passes and
+            # the rank comparisons stay in cache (a full batch×pool slab
+            # cost dim+3 DRAM sweeps per batch at a 10k pool).
+            rank = np.empty(len(tn), dtype=np.int64)
+            for s, pc in _seq_cos_blocks(tn, pmat):
+                e = s + len(pc)
                 beats = (
                     (pc > own[s:e, None])
                     | (

@@ -55,7 +55,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kenlm_spark.operators.ivf import kmeans_assign_ctes, train_centroids
-from kenlm_spark.operators.similarity import _seq_dot, _seq_sq_norm
+from kenlm_spark.operators.similarity import (
+    _seq_cos_blocks,
+    _seq_dot,
+    _seq_sq_norm,
+)
 
 
 def semdedup_labels(
@@ -257,23 +261,12 @@ def semdedup_losers(
                 return pd.DataFrame({"nid": pd.Series([], dtype="int64")})
             order = np.argsort(pdf["nid"].to_numpy(), kind="stable")
             ids = pdf["nid"].to_numpy()[order]
-            V = np.stack(
-                [
-                    np.asarray(v, dtype=np.float64)
-                    for v in pdf["vn"].to_numpy()[order]
-                ]
-            )
+            V = np.stack(pdf["vn"].to_numpy()[order])
             ca = pdf["c_sim"].to_numpy()[order]
             out: set = set()
-            B = 512  # row block: bounds the m*B score slab (~20 MB)
             col = np.arange(m)
-            for s in range(0, m, B):
-                e = min(s + B, m)
-                acc = np.zeros((e - s, m))
-                for d in range(V.shape[1]):
-                    acc += V[s:e, d : d + 1] * V[None, :, d]
-                score = np.round(acc, 6)
-                gi = np.arange(s, e)
+            for s, score in _seq_cos_blocks(V, V):
+                gi = np.arange(s, s + len(score))
                 # ids sorted: column index > row index <=> id_a < id_b
                 mask = (score >= tau_f) & (col[None, :] > gi[:, None])
                 ii, jj = np.nonzero(mask)

@@ -224,6 +224,32 @@ def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return acc
 
 
+def _seq_cos_blocks(a: np.ndarray, b: np.ndarray):
+    """Yield ``(s, score)`` row blocks of ``np.round(a @ b.T, 6)``, the
+    dot accumulated dim-sequentially (``_seq_dot``'s order, element for
+    element): ``score[r, j]`` is the rounded dot of ``a[s + r]`` and
+    ``b[j]``.  A block holds about 10 MB of scores, so the dim passes
+    stay in cache; block size never changes an element's operation order.
+
+    ``a`` and ``b`` are 2-D float64 arrays; no row is dropped or checked
+    for nulls.  The verify groups stack ``vn`` columns written by a 2-D
+    numpy pass (``semdedup_labels.assign_pass``,
+    ``embedding_near_dups.wide_pass``, ``curation``'s fused pass), and
+    ``retrieval_recall`` builds both sides with ``np.asarray`` in its own
+    pass; each raises on a null or ragged vector within an Arrow batch.
+    The SemDeDup, curation and retrieval passes also fix the dim to their
+    broadcast centroids or pool.  ``wide_pass`` fixes it per task only,
+    so an embedding column whose dim differs between input partitions
+    reaches ``bucket_grp``'s ``np.stack`` and raises ``ValueError``
+    there, where the id-only-band verify drops the cross-dim pairs."""
+    rows = max(1, 10_000_000 // (8 * max(len(b), 1)))
+    for s in range(0, len(a), rows):
+        acc = np.zeros((min(rows, len(a) - s), len(b)))
+        for d in range(a.shape[1]):
+            acc += a[s : s + rows, d : d + 1] * b[None, :, d]
+        yield s, np.round(acc, 6)
+
+
 def embedding_near_dups(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -361,22 +387,11 @@ def embedding_near_dups(
                 return empty
             order = np.argsort(pdf["nid"].to_numpy(), kind="stable")
             ids = pdf["nid"].to_numpy()[order]
-            V = np.stack(
-                [
-                    np.asarray(v, dtype=np.float64)
-                    for v in pdf["vn"].to_numpy()[order]
-                ]
-            )
+            V = np.stack(pdf["vn"].to_numpy()[order])
             outs = []
-            B = 512  # row block bounds the m*B score slab (~8 MB)
             col = np.arange(m)
-            for s in range(0, m, B):
-                e = min(s + B, m)
-                acc = np.zeros((e - s, m))
-                for d in range(V.shape[1]):
-                    acc += V[s:e, d : d + 1] * V[None, :, d]
-                sc = np.round(acc, 6)
-                gi = np.arange(s, e)
+            for s, sc in _seq_cos_blocks(V, V):
+                gi = np.arange(s, s + len(sc))
                 mask = (sc >= thr) & (col[None, :] > gi[:, None])
                 ii, jj = np.nonzero(mask)
                 outs.append(

@@ -263,7 +263,7 @@ def main() -> None:
         "  closure rewrite folds the per-order union checkpoint chain into",
         "  ONE explode+distinct job (barriers 2×order → order+1; toy",
         "  construction 12.0s → 9.3s steady-state at order 5). Then",
-        "  scripts/bench_interpolate_scale.py interpolates two FULL",
+        "  a one-off script (since retired) interpolated two FULL",
         "  KN models estimated over disjoint halves of sf0.1 text:",
         "  order 3 → 29.6k-gram inputs, construct 3.97s / action 0.50s;",
         "  order 5 → 278k-gram inputs, 498,212 mixed grams, construct",
@@ -287,7 +287,7 @@ def main() -> None:
         "  (r7):** the three largest r6 regressions (q_langid_nb",
         "  3.83→6.12s, q_events_sessions 0.33→0.79s, q_filter_vocab_single",
         "  0.84→1.43s; code untouched) were re-measured fresh-JVM",
-        "  steady-state (scripts/bench_isolated.py, best of runs 2-5 at",
+        "  steady-state (a fresh JVM per query, best of runs 2-5 at",
         "  sf0.1/local[32]) WITH a calibration probe: q_quality_filter",
         "  measured 0.53s isolated against its documented 0.19s r4 row,",
         "  i.e. the box sat in a ~2.8x slow throughput window (the",
@@ -315,7 +315,7 @@ def main() -> None:
         "  change; the r2 0.099s was the same query in a lighter JVM.",
         "- **Collect-free flagship evidence** (estimate → exported bucketed",
         "  model tables → join-scored pipeline, 0 Exchange above the model",
-        "  scan): see BENCH/FLAGSHIP.md (scripts/flagship_collectfree_demo.py).",
+        "  scan): see BENCH/FLAGSHIP.md.",
         "- **Join-scorer candidate volume watch item — CLOSED (r4, Bloom",
         "  prune):** gen_keys emits one row per (position, order) —",
         "  O(order × tokens) shuffle into the model join. r4 adds a",

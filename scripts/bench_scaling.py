@@ -239,7 +239,7 @@ spark.sparkContext.addPyFile({zip_path!r})
 def probe(_):
     from kenlm_spark.functions import md5_kernel
     from kenlm_spark.ngram import native_kernel
-    return [native_kernel._compile() is not None, md5_kernel._compile() is not None]
+    return [native_kernel.load() is not None, md5_kernel.load() is not None]
 
 native = spark.sparkContext.parallelize([0], 1).map(probe).collect()[0]
 INPUT = {path!r}

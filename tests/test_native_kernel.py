@@ -23,9 +23,9 @@ sys.path.insert(0, str(pathlib.Path(__file__).parent.parent / "scripts"))
 
 
 def _native_available() -> bool:
-    from kenlm_spark.ngram.native_kernel import _compile
+    from kenlm_spark.ngram.native_kernel import load
 
-    return _compile() is not None
+    return load() is not None
 
 
 pytestmark = pytest.mark.skipif(
@@ -130,11 +130,11 @@ def test_native_scorer_not_pickled():
 def test_native_disabled_by_env(monkeypatch):
     """KENLM_SPARK_NATIVE=0 must force the numpy path (used for A/B)."""
     import kenlm_spark.ngram.native_kernel as nk
+    from kenlm_spark import native
 
     monkeypatch.setenv("KENLM_SPARK_NATIVE", "0")
-    monkeypatch.setattr(nk, "_lib", None)
-    monkeypatch.setattr(nk, "_lib_tried", False)
-    assert nk._compile() is None
+    monkeypatch.setattr(native, "_libs", {})
+    assert nk.load() is None
 
 
 def test_score_id_stream_matches_score_batch():
@@ -293,8 +293,8 @@ def test_kernels_compile_from_pyfiles_zip(tmp_path):
         "from kenlm_spark.functions import md5_kernel\n"
         "from kenlm_spark.ngram import native_kernel\n"
         "print(json.dumps([kenlm_spark.__file__,"
-        " native_kernel._compile() is not None,"
-        " md5_kernel._compile() is not None]))\n"
+        " native_kernel.load() is not None,"
+        " md5_kernel.load() is not None]))\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code], cwd=tmp_path, env=env,

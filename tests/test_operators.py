@@ -252,6 +252,27 @@ def test_embedding_lsh_bucket_verify_identical(spark, emb):
     assert default == bucket and len(default) > 0
 
 
+def test_seq_cos_blocks_matches_per_pair_seq_dot():
+    """The one blocked cosine verify equals per-pair ``_seq_dot`` rounding
+    bit for bit.  1,300 columns give 961-row blocks, so the 1,300 rows
+    cross a block boundary.  Entries span 12 decades, so a dot summed in
+    any other order (a BLAS matmul, say) rounds differently."""
+    from kenlm_spark.operators.similarity import _seq_cos_blocks, _seq_dot
+
+    rng = np.random.default_rng(5)
+    scale = 10.0 ** rng.integers(-3, 9, (1300, 20))
+    v = rng.standard_normal((1300, 20)) * scale
+    blocks = list(_seq_cos_blocks(v, v))
+    starts = [s for s, _ in blocks]
+    assert len(blocks) > 1
+    assert starts == [0, *np.cumsum([len(b) for _, b in blocks])[:-1]]
+    got = np.concatenate([b for _, b in blocks])
+    want = np.stack(
+        [np.round(_seq_dot(np.broadcast_to(r, v.shape), v), 6) for r in v]
+    )
+    assert np.array_equal(got.view(np.uint64), want.view(np.uint64))
+
+
 def test_embedding_exact_path_size_guard(spark):
     """The exact O(n²) path must fail fast above max_exact_rows instead of
     silently cross-joining an arbitrarily large DataFrame; use_lsh=True

@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from kenlm_spark.operators.semdedup import semdedup_labels
+from kenlm_spark.operators.semdedup import semdedup_labels, semdedup_losers
 
 
 def _rows():
@@ -111,6 +111,39 @@ def test_oversized_cell_hash_split_still_dedups(spark):
     assert 1 <= len(got_keep) <= 5
     # the small healthy cell is untouched by the split (nsplit=1)
     assert all(by_id[100 + i]["keep"] for i in range(3))
+
+
+def test_losers_numpy_verify_matches_catalyst_chain(spark):
+    """semdedup_losers' two verify paths — the per-(cell, sub) numpy
+    blocks (dim=None) and the unrolled Catalyst chain (dim=4) — drop
+    the same ids on one wide table with near-dup clusters, tied and
+    NaN centroid cosines, and an oversized cell that splits."""
+    rng = np.random.default_rng(3)
+    rows = []
+    for cell in range(3):
+        for k in range(4):
+            base = rng.standard_normal(4)
+            for j in range(5 + cell):
+                v = base + rng.standard_normal(4) * (0.002 * j)
+                rows.append((cell, v / np.linalg.norm(v)))
+    # c_sim ties every 4th id; every 11th is NaN
+    c_sim = [round(0.5 + 0.01 * (nid % 4), 6) for nid in range(len(rows))]
+    wide = [
+        (nid, [float(x) for x in v], cell,
+         float("nan") if nid % 11 == 0 else c_sim[nid])
+        for nid, (cell, v) in enumerate(rows)
+    ]
+    df = spark.createDataFrame(
+        wide, "nid long, vn array<double>, cell int, c_sim double"
+    )
+
+    def losers(dim):
+        out = semdedup_losers(df, tau=0.99, max_cell=24, dim=dim).collect()
+        return sorted(r["nid"] for r in out)
+
+    numpy_path = losers(None)
+    assert 0 < len(numpy_path) < len(wide)
+    assert numpy_path == losers(4)
 
 
 def test_cluster_balanced_sample_quota_and_determinism(spark):
